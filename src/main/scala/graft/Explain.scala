@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.core.GraftSession
 
 /** Dev tool: print the formatted physical plan of named queries.
   * Usage: runMain graft.Explain <sfDir> <name-substring>[,<substring>...]
@@ -8,19 +10,13 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val pats = args(1).split(',').toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     SparkEntry.queries
       .filter(kv => pats.exists(kv._1.contains)).toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>
         println(s"==== $name ====")
         try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+        catch { case NonFatal(e) => println(s"failed: ${e.getMessage}") }
       }
     spark.stop()
   }

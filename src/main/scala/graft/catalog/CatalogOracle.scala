@@ -112,7 +112,6 @@ object CatalogOracle {
   val q91SnapshotGc: Q = (s, _) => {
     import s.implicits._
     import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     val rootP = Paths.get(GcRoot)
     val marker = rootP.resolve(".fixture_key")
     val key = {
@@ -124,12 +123,7 @@ object CatalogOracle {
     val cached = Files.exists(marker) &&
       new String(Files.readAllBytes(marker), "UTF-8") == key
     if (!cached) {
-      if (Files.exists(rootP)) {
-        val walk = Files.walk(rootP)
-        try walk.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.delete(f))
-        finally walk.close()
-      }
+      graft.core.Fs.deleteRecursively(rootP)
       val meta = FbcIngest.readMetaStream(s, FixtureSource)
       GcSnapshotIds.foreach(id =>
         FbcIngest.writeSnapshot(s, meta, GcRoot, snapshotId = Some(id)))
@@ -168,7 +162,6 @@ object CatalogOracle {
   val q169TimeTravel: Q = (s, _) => {
     import s.implicits._
     import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     val rootP = Paths.get(TtRoot)
     val marker = rootP.resolve(".fixture_key")
     val key = {
@@ -180,12 +173,7 @@ object CatalogOracle {
     val cached = Files.exists(marker) &&
       new String(Files.readAllBytes(marker), "UTF-8") == key
     if (!cached) {
-      if (Files.exists(rootP)) {
-        val walk = Files.walk(rootP)
-        try walk.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.delete(f))
-        finally walk.close()
-      }
+      graft.core.Fs.deleteRecursively(rootP)
       val meta = FbcIngest.readMetaStream(s, FixtureSource)
       // growing prefixes in name order — simulated append-only history
       val w = org.apache.spark.sql.expressions.Window

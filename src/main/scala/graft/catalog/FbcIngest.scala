@@ -1,10 +1,9 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -245,11 +244,7 @@ object FbcIngest {
     }
     val victims = all.dropRight(keep).filterNot(active.contains)
     victims.foreach { id =>
-      val dir = snaps.resolve(id)
-      val walk = Files.walk(dir)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
+      graft.core.Fs.deleteRecursively(snaps.resolve(id))
     }
     victims
   }

@@ -11,21 +11,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of that is re-implemented here.
   */
 object GraftSession {
-  /** Local session sized for the container (local[32], 128 GiB). On a real
-    * cluster the builder is replaced by spark-submit conf; nothing else in
-    * the library changes.
+  /** The one session factory: Bench, Verify, Explain, the specs and the
+    * benchmark all build their session here. `cores` defaults to
+    * `SPARK_GRAFT_CPUS`, or the processor count when that is unset. On a
+    * real cluster the builder is replaced by spark-submit conf; nothing
+    * else in the library changes.
     */
-  def local(appName: String = "graft", cores: Int = 32): SparkSession = {
+  def local(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // ContextCleaner only frees finished broadcasts/shuffles when the
+      // DRIVER GC runs, and its own periodic-GC default (30 min) never
+      // fires inside a ~10-minute bench — so ~560 entries' broadcast
+      // blocks accumulate in the block manager and mid-pass entries pay
+      // eviction churn that isn't theirs (r15: q312 read 25.5 s in-pass
+      // vs 8.9 s in its own same-run sentinel). 1 min + the explicit
+      // System.gc() cadence in Bench keeps the store near-empty all run.
+      .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Free the last query's localCheckpoint blocks and cached plans before
+    * the next one: across hundreds of entries the leftover blocks
+    * otherwise fill the one block manager and late entries pay eviction
+    * churn that isn't theirs (r5: q81/q99 3-6× slower in the full run
+    * than in isolation).
+    */
+  def freeCaches(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    spark.catalog.clearCache()
   }
 }
 

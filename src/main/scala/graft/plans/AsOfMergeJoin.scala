@@ -26,8 +26,8 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * exactly what EnsureRequirements would give a sort-merge join — and
   * resolves matches in one forward walk with O(1) state (the latest
   * right row per key): no union blow-up, no window buffer, no
-  * post-filter. Measured on a join-dominated synthetic (graft.ProfAsof:
-  * 2M left × 1M right, 100k keys, multi-column payloads, local[32],
+  * post-filter. Measured on a join-dominated synthetic
+  * (2M left × 1M right, 100k keys, multi-column payloads, local[32],
   * warm): composition 0.74–0.89 s, native 0.52–0.58 s — ~1.4×; on
   * q31's own fixture the signups-dedup aggregate dominates both plans
   * and the spellings tie, which is why the bench carries both rows.
@@ -264,13 +264,7 @@ object AsOfMergeJoin {
     Seq(p, g).foreach { t =>
       s.sql(s"DROP TABLE IF EXISTS $t")
       // leftovers from prior JVMs survive the in-memory catalog
-      val dir = java.nio.file.Paths.get(warehouse, t)
-      if (java.nio.file.Files.exists(dir)) {
-        val w = java.nio.file.Files.walk(dir)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(java.nio.file.Files.delete(_))
-        finally w.close()
-      }
+      graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(warehouse, t))
     }
     val ev = graft.core.Tables.events(s, dir)
     ev.filter($"event_type" === "purchase")

@@ -1,7 +1,6 @@
 package graft.relational
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,13 +29,6 @@ object BucketedQueries {
 
   private val built = scala.collection.concurrent.TrieMap[String, (String, String)]()
 
-  private def deleteRec(p: Path): Unit =
-    if (Files.exists(p)) {
-      val w = Files.walk(p)
-      try w.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
-      finally w.close()
-    }
-
   /** Write orders+lineitem for `dir` as bucketed+sorted managed tables
     * (once per JVM per scale dir). Bucketed layout only exists through
     * the catalog — `saveAsTable`, not `save` — which is exactly how a
@@ -50,7 +42,8 @@ object BucketedQueries {
         s.conf.get("spark.sql.warehouse.dir")).getPath
       Seq(o, l).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
-        deleteRec(Paths.get(warehouse, t)) // leftovers from prior JVMs
+        // leftovers from prior JVMs
+        graft.core.Fs.deleteRecursively(Paths.get(warehouse, t))
       }
       T.orders(s, dir).write.format("parquet")
         .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,13 +45,7 @@ object DynamicOverwrite {
     val table = s"$FixtureRoot/$key/events_by_day"
     // rebuild the base table fresh every run: the overwrite IS the
     // query, so the fixture must start un-overwritten every time
-    val root = Paths.get(FixtureRoot, key)
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
+    graft.core.Fs.deleteRecursively(Paths.get(FixtureRoot, key))
     val ev = T.events(s, dir)
       .select($"event_id", $"user_id", $"value", to_date($"ts").as("day"))
     ev.write.partitionBy("day").parquet(table)

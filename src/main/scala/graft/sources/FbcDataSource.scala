@@ -85,10 +85,7 @@ object FbcDataSource {
   def writeFileTree(meta: DataFrame, root: String): Unit = {
     val rows = meta.select("package", "schema", "name", "blob").collect()
     val rootP = Paths.get(root)
-    if (Files.exists(rootP)) {
-      Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    graft.core.Fs.deleteRecursively(rootP)
     rows.foreach { r =>
       val dir = rootP.resolve(r.getString(0)).resolve(r.getString(1))
       Files.createDirectories(dir)

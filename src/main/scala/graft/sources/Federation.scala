@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,13 +57,7 @@ object Federation {
       s":mtime=${Files.getLastModifiedTime(src).toMillis}:legs=orc,csv:mod3"
     if (Files.exists(marker) &&
       new String(Files.readAllBytes(marker), "UTF-8") == key) return
-    val root = marker.getParent
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
+    graft.core.Fs.deleteRecursively(marker.getParent)
     val base = T.orders(s, dir)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
     base.filter($"o_orderkey" % 3 === 1)

@@ -256,14 +256,7 @@ object LayoutQueries {
       .toDF("__slot", "__slotval")
     // a stale dst (e.g. from a previous run over different partitions)
     // must not leak old partitions into the compacted layout
-    val dstP = Paths.get(dst)
-    if (Files.exists(dstP)) {
-      val walk = Files.walk(dstP)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toList.reverse.foreach(Files.delete)
-      } finally walk.close()
-    }
+    graft.core.Fs.deleteRecursively(Paths.get(dst))
     val df = s.read.parquet(src)
     val dataCols = df.columns.filter(_ != partitionCol).toSeq
     df.join(broadcast(parts), col(partitionCol).cast("string") === $"__pval")

@@ -38,12 +38,16 @@ object SchemaEvolution {
     * part file to a stable name, q91/compaction pattern).
     */
   private def writeOneFile(df: DataFrame, target: Path): Unit = {
-    val tmp = Files.createTempDirectory("evo_batch").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).filter(_.toString.endsWith(".parquet"))
-      .findFirst().orElseThrow()
-    Files.createDirectories(target.getParent)
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    val tmp = Files.createTempDirectory("evo_batch")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val parts = Files.list(tmp)
+      val part =
+        try parts.filter(_.toString.endsWith(".parquet")).findFirst().orElseThrow()
+        finally parts.close()
+      Files.createDirectories(target.getParent)
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    } finally graft.core.Fs.deleteRecursively(tmp)
   }
 
   private def writeFixture(s: SparkSession, dir: String): Unit = {

@@ -3,11 +3,12 @@ package graft.streaming
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.{Tables => T}
+import graft.core.{Fs, Tables => T}
 
 /** CDC update row for the qs02 bench (top-level: Spark's encoder codegen
   * cannot instantiate a case class nested inside an object). */
@@ -26,6 +27,10 @@ case class BenchServeQuery(qid: Long, qx: Long, qy: Long)
   * NOT oracle rows (their correctness lives in EventStreamsSpec /
   * CdcApplySpec); they exist so a state-management regression shows up
   * as a bench delta instead of passing silently.
+  *
+  * Every entry runs its query through [[runQuery]] (memory-sink entries
+  * through [[runMemorySink]]), so a run leaves no query, temp view or
+  * checkpoint behind, also when it throws mid-feed.
   *
   * The driver-side `collect` here is the MemoryStream feeding contract
   * (data must originate on the driver) and is capped at [[BenchRows]]
@@ -73,6 +78,76 @@ object StreamBench {
     }
   }
 
+  /** The run driver: start the query on a fresh `bench-<tag>-ckpt`
+    * checkpoint, feed it, stop it. In `finally` the query is stopped if
+    * it is still active and the checkpoint is deleted, so a query that
+    * throws mid-feed leaks neither a running query nor its state.
+    */
+  private[streaming] def runQuery(tag: String)(start: String => StreamingQuery)
+      (feed: StreamingQuery => Unit): Unit = {
+    val ckpt = Files.createTempDirectory(s"bench-$tag-ckpt")
+    var q: StreamingQuery = null
+    try {
+      q = start(ckpt.toString)
+      feed(q)
+      q.stop(); q.awaitTermination()
+    } finally {
+      if (q != null && q.isActive) q.stop()
+      Fs.deleteRecursively(ckpt)
+    }
+  }
+
+  /** [[runQuery]] into a memory sink: `out` is written in `mode` to a
+    * fresh `bench_<tag>_<n>` table, which `read` gets once the query has
+    * stopped; the table's view is dropped in `finally`.
+    */
+  private[streaming] def runMemorySink[A](s: SparkSession, tag: String,
+      out: Dataset[_], mode: String)(feed: StreamingQuery => Unit)
+      (read: DataFrame => A): A = {
+    val name = s"bench_${tag}_${runId.incrementAndGet()}"
+    try {
+      runQuery(tag)(ckpt => out.writeStream.format("memory").queryName(name)
+        .outputMode(mode).option("checkpointLocation", ckpt).start())(feed)
+      read(s.table(name))
+    } finally s.catalog.dropTempView(name)
+  }
+
+  /** Feed `rows` in `batches` chunks, then each of `tail` (sentinels or
+    * empty batches), one micro-batch per chunk. */
+  private[streaming] def feedChunks[T](stream: MemoryStream[T], rows: Seq[T],
+      batches: Int = BloomBatches, tail: Seq[Seq[T]] = Nil)
+      (q: StreamingQuery): Unit =
+    (rows.grouped(rows.size / batches + 1) ++ tail).foreach { chunk =>
+      stream.addData(chunk)
+      q.processAllAvailable()
+    }
+
+  /** Two-sided feed (qs05, qs09): both sides in [[BloomBatches]] chunks,
+    * side by side, then `sentinel` on both sides so the final watermark
+    * resolves every pending row. */
+  private def feedBothSides(left: MemoryStream[Event], lRows: Seq[Event],
+      right: MemoryStream[Event], rRows: Seq[Event], sentinel: Event)
+      (q: StreamingQuery): Unit = {
+    val lChunks = lRows.grouped(lRows.size / BloomBatches + 1).toSeq
+    val rChunks = rRows.grouped(rRows.size / BloomBatches + 1).toSeq
+    lChunks.zipAll(rChunks, Seq.empty[Event], Seq.empty[Event]).foreach {
+      case (l, r) =>
+        if (l.nonEmpty) left.addData(l)
+        if (r.nonEmpty) right.addData(r)
+        q.processAllAvailable()
+    }
+    left.addData(sentinel); right.addData(sentinel)
+    q.processAllAvailable()
+  }
+
+  /** A far-future row (one day past `rows`' last event) that pushes the
+    * watermark past every real row; `user_id` -1 marks it for readers. */
+  private def sentinelAfter(rows: Seq[Event],
+      eventType: String = "sentinel"): Event =
+    Event(-1L, -1L, eventType,
+      new java.sql.Timestamp(rows.map(_.ts.getTime).max + 24L * 3600 * 1000),
+      0.0)
+
   private def boundedEvents(s: SparkSession, dir: String): Seq[Event] = {
     import s.implicits._
     T.events(s, dir)
@@ -86,28 +161,15 @@ object StreamBench {
     * the timing tracks exactly the fixed-size-filter read/modify/write
     * path a state regression would inflate.
     */
-  val qs01BloomDedupStream: Q = (s, dir) => {
+  val qs01BloomDedupStream: Q = (s, dir) => withStreamConfs(s) {
     import s.implicits._
-    withStreamConfs(s) {
-      implicit val sqlCtx = s.sqlContext
-      val rows = boundedEvents(s, dir)
-      val stream = MemoryStream[Event]
-      val name = s"bench_bloom_${runId.incrementAndGet()}"
-      val q = EventStreams.bloomDedup(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation",
-          Files.createTempDirectory("bench-bloom-ckpt").toString)
-        .start()
-      rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-        stream.addData(chunk)
-        q.processAllAvailable()
-      }
-      q.stop(); q.awaitTermination()
-      val out = s.table(name).count()
-      s.catalog.dropTempView(name)
-      Seq((rows.size.toLong, out)).toDF("n_in", "n_out")
-    }
+    implicit val sqlCtx = s.sqlContext
+    val rows = boundedEvents(s, dir)
+    val stream = MemoryStream[Event]
+    val out = runMemorySink(s, "bloom",
+      EventStreams.bloomDedup(stream.toDS()), "update")(
+      feedChunks(stream, rows))(_.count())
+    Seq((rows.size.toLong, out)).toDF("n_in", "n_out")
   }
 
   /** qs02 — CDC apply over [[CdcBatches]] micro-batches: each batch
@@ -126,17 +188,16 @@ object StreamBench {
     val updates = rows.map { e =>
       BenchCdcRow(e.event_id % keySpace, e.event_type, e.event_id)
     }
-    val root = Files.createTempDirectory("bench-cdc-root").toString
-    val ckpt = Files.createTempDirectory("bench-cdc-ckpt").toString
+    val root = Files.createTempDirectory("bench-cdc-root")
     val stream = MemoryStream[BenchCdcRow]
-    val q = CdcApply.start(stream.toDF(), root, Seq("k"), "seq", ckpt)
-    updates.grouped(updates.size / CdcBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val finalState = CdcApply.activeState(s, root, stream.toDF().schema)
-    Seq((updates.size.toLong, finalState.count())).toDF("n_in", "n_keys")
+    val nKeys =
+      try {
+        runQuery("cdc")(ckpt =>
+          CdcApply.start(stream.toDF(), root.toString, Seq("k"), "seq", ckpt))(
+          feedChunks(stream, updates, CdcBatches))
+        CdcApply.activeState(s, root.toString, stream.toDF().schema).count()
+      } finally Fs.deleteRecursively(root)
+    Seq((updates.size.toLong, nKeys)).toDF("n_in", "n_keys")
   }
 
   /** qs03 — streaming Count-Min sketch over [[BloomBatches]]
@@ -151,29 +212,17 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_cms_${runId.incrementAndGet()}"
-    val q = CmsStream.cmsSketches(stream.toDS())
-      .toDF("shard", "sketch")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-cms-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
+    val all = runMemorySink(s, "cms",
+      CmsStream.cmsSketches(stream.toDS()).toDF("shard", "sketch"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"sketch").as[(Long, Array[Byte])].collect())
     // latest sketch per shard: update mode emits one row per (shard,
     // batch); CMS counters only grow, so per shard the cumulative
     // (= latest) sketch is the one with the max total. shards·batches
     // rows — driver-side pick is bounded.
-    val all = s.table(name).select($"shard", $"sketch")
-      .as[(Long, Array[Byte])].collect()
     val latest = all.groupBy(_._1).map { case (_, rows) =>
       rows.map(_._2).maxBy(b => CmsStream.merge(Seq(b)).totalCount())
     }.toSeq
-    s.catalog.dropTempView(name)
     val merged = CmsStream.merge(latest)
     Seq((rows.size.toLong, merged.totalCount()))
       .toDF("n_in", "sketch_total")
@@ -189,20 +238,9 @@ object StreamBench {
     val rows = boundedEvents(s, dir)
       .sortBy(e => (e.user_id, e.ts.getTime, e.event_id))
     val stream = MemoryStream[Event]
-    val name = s"bench_anom_${runId.incrementAndGet()}"
-    val q = AnomalyStream.zScoreAnomalies(stream.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-anom-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val out = s.table(name).count()
-    s.catalog.dropTempView(name)
+    val out = runMemorySink(s, "anom",
+      AnomalyStream.zScoreAnomalies(stream.toDS()), "update")(
+      feedChunks(stream, rows))(_.count())
     Seq((rows.size.toLong, out)).toDF("n_in", "n_anomalies")
   }
 
@@ -216,20 +254,9 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir).sortBy(_.event_id)
     val stream = MemoryStream[Event]
-    val name = s"bench_topk_${runId.incrementAndGet()}"
-    val q = TopKStream.topKPerUser(stream.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-topk-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val out = s.table(name).count()
-    s.catalog.dropTempView(name)
+    val out = runMemorySink(s, "topk",
+      TopKStream.topKPerUser(stream.toDS()), "update")(
+      feedChunks(stream, rows))(_.count())
     Seq((rows.size.toLong, out)).toDF("n_in", "n_emitted")
   }
 
@@ -247,31 +274,12 @@ object StreamBench {
     val purchases = rows.filter(_.event_type == "purchase")
     val signups = rows.filter(e =>
       e.event_type == "signup" || e.event_type == "view")
-    val maxTs = rows.map(_.ts.getTime).max
     val pS = MemoryStream[Event]
     val sS = MemoryStream[Event]
-    val name = s"bench_asof_${runId.incrementAndGet()}"
-    val q = EventStreams.streamingAsOf(pS.toDF(), sS.toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-asof-ckpt").toString)
-      .start()
-    val pChunks = purchases.grouped(purchases.size / BloomBatches + 1).toSeq
-    val sChunks = signups.grouped(signups.size / BloomBatches + 1).toSeq
-    pChunks.zipAll(sChunks, Seq.empty[Event], Seq.empty[Event]).foreach {
-      case (p, sg) =>
-        if (p.nonEmpty) pS.addData(p)
-        if (sg.nonEmpty) sS.addData(sg)
-        q.processAllAvailable()
-    }
-    val sentinel = Event(-1L, -1L, "sentinel",
-      new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), 0.0)
-    pS.addData(sentinel); sS.addData(sentinel)
-    q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val out = s.table(name).filter($"user_id" =!= -1L).count()
-    s.catalog.dropTempView(name)
+    val out = runMemorySink(s, "asof",
+      EventStreams.streamingAsOf(pS.toDF(), sS.toDF()), "append")(
+      feedBothSides(pS, purchases, sS, signups, sentinelAfter(rows)))(
+      _.filter($"user_id" =!= -1L).count())
     Seq((purchases.size.toLong, out)).toDF("n_probes", "n_matched")
   }
 
@@ -284,28 +292,14 @@ object StreamBench {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
-    val maxTs = rows.map(_.ts.getTime).max
     val stream = MemoryStream[Event]
-    val name = s"bench_funnel_${runId.incrementAndGet()}"
-    val q = EventStreams.streamingFunnel(stream.toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-funnel-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
     // signup-typed sentinel: it must SURVIVE the funnel's event-type
     // filter (which runs before the watermark operator) to advance the
     // watermark past every real row
-    stream.addData(Event(-1L, -1L, "signup",
-      new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), 0.0))
-    q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val out = s.table(name).filter($"user_id" =!= -1L).count()
-    s.catalog.dropTempView(name)
+    val out = runMemorySink(s, "funnel",
+      EventStreams.streamingFunnel(stream.toDF()), "append")(
+      feedChunks(stream, rows, tail = Seq(Seq(sentinelAfter(rows, "signup")))))(
+      _.filter($"user_id" =!= -1L).count())
     Seq((rows.size.toLong, out)).toDF("n_in", "n_users")
   }
 
@@ -318,32 +312,14 @@ object StreamBench {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
-    val maxTs = rows.map(_.ts.getTime).max
     val stream = MemoryStream[Event]
-    val name = s"bench_chain_${runId.incrementAndGet()}"
-    val q = EventStreams.dedupedTumblingCounts(stream.toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-chain-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    stream.addData(Event(-1L, -1L, "sentinel",
-      new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), 0.0))
-    q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val out = s.table(name).filter($"event_type" =!= "sentinel").count()
-    s.catalog.dropTempView(name)
+    val out = runMemorySink(s, "chain",
+      EventStreams.dedupedTumblingCounts(stream.toDF()), "append")(
+      feedChunks(stream, rows, tail = Seq(Seq(sentinelAfter(rows)))))(
+      _.filter($"event_type" =!= "sentinel").count())
     Seq((rows.size.toLong, out)).toDF("n_in", "n_windows")
   }
 
-  /** Bench-only entries — timed by [[graft.Bench]], absent from
-    * [[graft.SparkEntry.queries]] so the correctness gate (which has no
-    * streaming-SQL oracle) is unaffected.
-    */
   /** qs08 — streaming KLL quantiles over [[BloomBatches]] micro-batches:
     * per shard, the O(k·log n) distribution-state fold in ValueState —
     * completing the sketch-state trio (qs01 membership, qs03
@@ -355,27 +331,15 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_kll_${runId.incrementAndGet()}"
-    val q = KllStream.kllSketches(stream.toDS())
-      .toDF("shard", "sketch")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-kll-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
+    val all = runMemorySink(s, "kll",
+      KllStream.kllSketches(stream.toDS()).toDF("shard", "sketch"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"sketch").as[(Long, Array[Byte])].collect())
     // latest sketch per shard = the one with the largest folded count
     // (n only grows); shards·batches rows — driver-side pick is bounded
-    val all = s.table(name).select($"shard", $"sketch")
-      .as[(Long, Array[Byte])].collect()
     val latest = all.groupBy(_._1).map { case (_, rs) =>
       rs.map(_._2).maxBy(b => graft.functions.KllState.deserialize(b).n)
     }.toSeq
-    s.catalog.dropTempView(name)
     val merged = KllStream.merge(latest)
     val deciles = merged.quantiles(10)
     Seq((rows.size.toLong, merged.n, deciles(5)))
@@ -395,33 +359,15 @@ object StreamBench {
     val rows = boundedEvents(s, dir)
     val purchases = rows.filter(_.event_type == "purchase")
     val signups = rows.filter(_.event_type == "signup")
-    val maxTs = rows.map(_.ts.getTime).max
     val pS = MemoryStream[Event]
     val sS = MemoryStream[Event]
-    val name = s"bench_fullouter_${runId.incrementAndGet()}"
-    val q = EventStreams.attributionLedger(pS.toDF(), sS.toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-fullouter-ckpt").toString)
-      .start()
-    val pChunks = purchases.grouped(purchases.size / BloomBatches + 1).toSeq
-    val sChunks = signups.grouped(signups.size / BloomBatches + 1).toSeq
-    pChunks.zipAll(sChunks, Seq.empty[Event], Seq.empty[Event]).foreach {
-      case (p, sg) =>
-        if (p.nonEmpty) pS.addData(p)
-        if (sg.nonEmpty) sS.addData(sg)
-        q.processAllAvailable()
+    val (matched, orphans) = runMemorySink(s, "fullouter",
+      EventStreams.attributionLedger(pS.toDF(), sS.toDF()), "append")(
+      feedBothSides(pS, purchases, sS, signups, sentinelAfter(rows))) { t =>
+      val out = t.filter($"user_id" =!= -1L)
+      (out.filter($"purchase_id".isNotNull && $"signup_id".isNotNull).count(),
+        out.filter($"purchase_id".isNull || $"signup_id".isNull).count())
     }
-    val sentinel = Event(-1L, -1L, "sentinel",
-      new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), 0.0)
-    pS.addData(sentinel); sS.addData(sentinel)
-    q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val out = s.table(name).filter($"user_id" =!= -1L)
-    val matched = out.filter($"purchase_id".isNotNull && $"signup_id".isNotNull).count()
-    val orphans = out.filter($"purchase_id".isNull || $"signup_id".isNull).count()
-    s.catalog.dropTempView(name)
     Seq((matched, orphans)).toDF("n_matched", "n_orphans")
   }
 
@@ -437,29 +383,17 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_hll_${runId.incrementAndGet()}"
-    val q = HllStream.hllSketches(stream.toDS())
-      .toDF("shard", "sketch")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-hll-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
+    val all = runMemorySink(s, "hll",
+      HllStream.hllSketches(stream.toDS()).toDF("shard", "sketch"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"sketch").as[(Long, Array[Byte])].collect())
     // latest sketch per shard: HLL estimates only grow within a shard
     // (register maxima are monotone), so the max-estimate emission is
     // the cumulative one. shards·batches rows — bounded driver pick.
-    val all = s.table(name).select($"shard", $"sketch")
-      .as[(Long, Array[Byte])].collect()
     val latest = all.groupBy(_._1).map { case (_, rs) =>
       rs.map(_._2).maxBy(b =>
         org.apache.datasketches.hll.HllSketch.heapify(b).getEstimate)
     }.toSeq
-    s.catalog.dropTempView(name)
     val merged = HllStream.merge(latest)
     Seq((rows.size.toLong, math.round(merged.getEstimate)))
       .toDF("n_in", "est_distinct")
@@ -477,27 +411,15 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_rbm_${runId.incrementAndGet()}"
-    val q = BitmapStream.bitmapShards(stream.toDS())
-      .toDF("shard", "bm")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-rbm-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val all = s.table(name).select($"shard", $"bm")
-      .as[(Long, Array[Byte])].collect()
+    val all = runMemorySink(s, "rbm",
+      BitmapStream.bitmapShards(stream.toDS()).toDF("shard", "bm"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"bm").as[(Long, Array[Byte])].collect())
     // bitmaps only grow within a shard: max cardinality = cumulative
     val latest = all.groupBy(_._1).map { case (_, rs) =>
       rs.map(_._2).maxBy(b =>
         graft.functions.BitmapCodec.deserialize(b).getLongCardinality)
     }.toSeq
-    s.catalog.dropTempView(name)
     val merged = BitmapStream.merge(latest)
     val exact = rows.map(_.user_id).distinct.size.toLong
     require(merged.getLongCardinality == exact,
@@ -518,22 +440,10 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_rsv_${runId.incrementAndGet()}"
-    val q = ReservoirStream.reservoirShards(stream.toDS())
-      .toDF("shard", "sample")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-rsv-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val all = s.table(name).select($"shard", $"sample")
-      .as[(Long, Array[Byte])].collect()
-    s.catalog.dropTempView(name)
+    val all = runMemorySink(s, "rsv",
+      ReservoirStream.reservoirShards(stream.toDS()).toDF("shard", "sample"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"sample").as[(Long, Array[Byte])].collect())
     // every emission holds true observed (priority, id) pairs, and
     // bottom-k over the union of bottom-ks IS the global bottom-k
     // (semilattice) — so merging ALL emissions needs no latest-state
@@ -559,25 +469,11 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
       .sortBy(e => (e.ts.getTime, e.event_id))
-    val maxTs = rows.map(_.ts.getTime).max
     val stream = MemoryStream[Event]
-    val name = s"bench_sess_${runId.incrementAndGet()}"
-    val q = EventStreams.sessionCounts(stream.toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-sess-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    stream.addData(Event(-1L, -1L, "sentinel",
-      new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), 0.0))
-    q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val streamed = s.table(name).filter($"user_id" =!= -1L).count()
-    s.catalog.dropTempView(name)
+    val streamed = runMemorySink(s, "sess",
+      EventStreams.sessionCounts(stream.toDF()), "append")(
+      feedChunks(stream, rows, tail = Seq(Seq(sentinelAfter(rows)))))(
+      _.filter($"user_id" =!= -1L).count())
     val batch = rows.toDF()
       .groupBy($"user_id", session_window($"ts", "10 minutes"))
       .count().count()
@@ -599,32 +495,21 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     // harness bound (the BenchRows convention): 1000 docs × 16 bands
     // ≈ 16k state keys — enough that per-key state work dominates,
-    // small enough that the 2-run bench stays a bounded slice
+    // small enough that the bench's reps stay a bounded slice
     val docs = T.documents(s, dir).select($"doc_id", $"text")
       .filter($"doc_id" < 1000L)
       .localCheckpoint()
     val rows = LshDedupStream.bandRows(docs)
       .as[(Long, Int, Long)].collect().toSeq.sortBy(r => (r._1, r._2))
     val stream = MemoryStream[(Long, Int, Long)]
-    val name = s"bench_lsh_${runId.incrementAndGet()}"
-    val q = LshDedupStream.ownerStream(stream.toDS())
-      .toDF("band", "band_hash", "owner")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-lsh-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
     // min only decreases -> the per-bucket MIN over all emissions is
     // the final owner (no last-batch bookkeeping needed)
-    val streamed = s.table(name)
-      .groupBy($"band", $"band_hash").agg(min($"owner").as("owner"))
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
+    val streamed = runMemorySink(s, "lsh",
+      LshDedupStream.ownerStream(stream.toDS())
+        .toDF("band", "band_hash", "owner"), "update")(
+      feedChunks(stream, rows))(
+      _.groupBy($"band", $"band_hash").agg(min($"owner").as("owner"))
+        .localCheckpoint())
     val batch = LshDedupStream.batchOwners(docs)
     val diff = streamed.join(batch.withColumnRenamed("owner", "b_owner"),
         Seq("band", "band_hash"), "full_outer")
@@ -659,22 +544,10 @@ object StreamBench {
         .map { case (b, bs) => b -> bs.size.toLong }
     }
     val stream = MemoryStream[Event]
-    val name = s"bench_psi_${runId.incrementAndGet()}"
-    val q = PsiStream.psiStream(stream.toDS(), ref)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-psi-ckpt").toString)
-      .start()
-    curRows.grouped(curRows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
     // latest emission per type = the max-n_rows one (n_rows is the
     // monotone cumulative fold count); types × batches rows — bounded
-    val all = s.table(name).as[PsiEmit].collect()
-    s.catalog.dropTempView(name)
+    val all = runMemorySink(s, "psi", PsiStream.psiStream(stream.toDS(), ref),
+      "update")(feedChunks(stream, curRows))(_.as[PsiEmit].collect())
     val streamed = all.groupBy(_.event_type).map { case (t, es) =>
       t -> es.maxBy(_.n_rows)
     }
@@ -725,20 +598,9 @@ object StreamBench {
     }
     val curRows = curRows0.sortBy(e => (e.ts.getTime, e.event_id))
     val stream = MemoryStream[Event]
-    val name = s"bench_cusum_${runId.incrementAndGet()}"
-    val q = CusumStream.cusumStream(stream.toDS(), refs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-cusum-ckpt").toString)
-      .start()
-    curRows.grouped(curRows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val all = s.table(name).as[CusumEmit].collect()
-    s.catalog.dropTempView(name)
+    val all = runMemorySink(s, "cusum",
+      CusumStream.cusumStream(stream.toDS(), refs), "update")(
+      feedChunks(stream, curRows))(_.as[CusumEmit].collect())
     val streamed = all.groupBy(_.event_type).map { case (t, es) =>
       t -> es.maxBy(_.n_rows)
     }
@@ -776,20 +638,9 @@ object StreamBench {
     }
     val curRows = curRows0.sortBy(e => (e.ts.getTime, e.event_id))
     val stream = MemoryStream[Event]
-    val name = s"bench_ewma_${runId.incrementAndGet()}"
-    val q = EwmaStream.ewmaStream(stream.toDS(), refs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-ewma-ckpt").toString)
-      .start()
-    curRows.grouped(curRows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val all = s.table(name).as[EwmaEmit].collect()
-    s.catalog.dropTempView(name)
+    val all = runMemorySink(s, "ewma",
+      EwmaStream.ewmaStream(stream.toDS(), refs), "update")(
+      feedChunks(stream, curRows))(_.as[EwmaEmit].collect())
     val streamed = all.groupBy(_.event_type).map { case (t, es) =>
       t -> es.maxBy(_.n_rows)
     }
@@ -823,23 +674,10 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir).sortBy(e => (e.ts.getTime, e.event_id))
     val stream = MemoryStream[Event]
-    val name = s"bench_slhll_${runId.incrementAndGet()}"
-    val q = SlidingHllStream.slidingSketches(stream.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-slhll-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    (1 to 2).foreach { _ =>
-      stream.addData(Seq.empty[Event]); q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val emits = s.table(name).as[SlidingHllEmit].collect().toSeq
-    s.catalog.dropTempView(name)
+    val emits = runMemorySink(s, "slhll",
+      SlidingHllStream.slidingSketches(stream.toDS()), "update")(
+      feedChunks(stream, rows, tail = Seq(Nil, Nil)))(
+      _.as[SlidingHllEmit].collect().toSeq)
     val got = SlidingHllStream.mergeEstimates(emits)
     val twin = SlidingHllStream.batchEstimates(rows)
     val wmFinal = rows.map(_.ts.getTime).max -
@@ -882,27 +720,16 @@ object StreamBench {
       .select($"c_custkey".as("ckey"), $"c_mktsegment")
     val nCust = dim.count()
     val stream = MemoryStream[Event]
-    val name = s"bench_ssj_${runId.incrementAndGet()}"
-    val q = stream.toDS()
+    val out = stream.toDS()
       .withColumn("ckey", pmod($"user_id", lit(nCust)))
       .withColumn("cents",
         expr("CAST(FLOOR(100 * value) AS BIGINT)"))
       .join(dim, "ckey") // stream-static: dimension re-read per batch
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n"), sum($"cents").as("cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-ssj-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val streamed = s.table(name)
-      .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    s.catalog.dropTempView(name)
+    val streamed = runMemorySink(s, "ssj", out, "complete")(
+      feedChunks(stream, rows))(
+      _.as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap)
     val batch = s.createDataset(rows).toDF()
       .withColumn("ckey", pmod($"user_id", lit(nCust)))
       .withColumn("cents", expr("CAST(FLOOR(100 * value) AS BIGINT)"))
@@ -950,20 +777,13 @@ object StreamBench {
     }
     val streamed = scala.collection.mutable.Map[Long, Long]()
     val stream = MemoryStream[BenchServeQuery]
-    val q = stream.toDF()
-      .writeStream
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-serve-ckpt").toString)
+    runQuery("serve")(ckpt => stream.toDF().writeStream
+      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) streamed ++= serve(batch.localCheckpoint())
         ()
       }
-      .start()
-    qRows.grouped(qRows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
+      .start())(feedChunks(stream, qRows))
     val oneShot = serve(allQueries)
     require(streamed.toMap == oneShot,
       s"streamed serve diverges: ${streamed.size} vs ${oneShot.size} answers")
@@ -971,17 +791,6 @@ object StreamBench {
       .toDF("n_queries", "n_batches")
   }
 
-  /** qs22 — STREAMING INDEX MAINTENANCE: q477's HNSW-style insert run
-    * as a micro-batch pipeline — the index stays SERVABLE while new
-    * vectors land. The 10% delta split arrives as a MemoryStream in
-    * [[BloomBatches]] batches; each batch walks the CURRENT (evolving)
-    * graph via foreachBatch (so later inserts can link to earlier
-    * ones — the realism the one-shot q477 lacks), links both
-    * directions, and re-caps to M nearest; rounds are checkpointed
-    * with measured stats. Gate: full-corpus exact-truth recall of the
-    * q456 query set over the FINAL graph ≥ the q477 floor, and every
-    * streamed delta node must be wired into the final edge set.
-    */
   /** qs23 — streaming COUNT-SKETCH over [[BloomBatches]] micro-batches
     * (the signed sibling of qs03): per-shard Depth×Width cell fold,
     * final merged cells required BIT-IDENTICAL to the batch one-pass
@@ -992,22 +801,10 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_csketch_${runId.incrementAndGet()}"
-    val q = CountSketchStream.sketches(stream.toDS())
-      .toDF("shard", "cells")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-csketch-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val emissions = s.table(name).select($"shard", $"cells")
-      .as[(Long, Array[Byte])].collect()
-    s.catalog.dropTempView(name)
+    val emissions = runMemorySink(s, "csketch",
+      CountSketchStream.sketches(stream.toDS()).toDF("shard", "cells"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"cells").as[(Long, Array[Byte])].collect())
     val last = emissions.zipWithIndex
       .groupBy(_._1._1).map { case (_, es) => es.maxBy(_._2)._1._2 }.toSeq
     val merged = CountSketchStream.merge(last)
@@ -1021,6 +818,17 @@ object StreamBench {
       .toDF("n_in", "nonzero_cells")
   }
 
+  /** qs22 — STREAMING INDEX MAINTENANCE: q477's HNSW-style insert run
+    * as a micro-batch pipeline — the index stays SERVABLE while new
+    * vectors land. The 10% delta split arrives as a MemoryStream in
+    * [[BloomBatches]] batches; each batch walks the CURRENT (evolving)
+    * graph via foreachBatch (so later inserts can link to earlier
+    * ones — the realism the one-shot q477 lacks), links both
+    * directions, and re-caps to M nearest; rounds are checkpointed
+    * with measured stats. Gate: full-corpus exact-truth recall of the
+    * q456 query set over the FINAL graph ≥ the q477 floor, and every
+    * streamed delta node must be wired into the final edge set.
+    */
   val qs22GraphInsertStream: Q = (s, dir) => withStreamConfs(s) {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
@@ -1061,10 +869,8 @@ object StreamBench {
       $"y".as("qy")).as[BenchServeQuery].collect().toSeq.sortBy(_.qid)
     require(dRows.nonEmpty, "qs22 needs a non-empty delta batch")
     val stream = MemoryStream[BenchServeQuery]
-    val q = stream.toDF()
-      .writeStream
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-gins-ckpt").toString)
+    runQuery("gins")(ckpt => stream.toDF().writeStream
+      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val dq = batch.localCheckpoint()
@@ -1083,12 +889,7 @@ object StreamBench {
         }
         ()
       }
-      .start()
-    dRows.grouped(dRows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
+      .start())(feedChunks(stream, dRows))
     // every streamed delta must be wired in
     val wired = graph.select($"a".as("vec_id")).distinct()
       .join(delta.select($"vec_id"), "vec_id").count()
@@ -1126,20 +927,9 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_wmdedup_${runId.incrementAndGet()}"
-    val q = EventStreams.dedupWithinWatermark(stream.toDS().toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-wmdedup-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val out = s.table(name).count()
-    s.catalog.dropTempView(name)
+    val out = runMemorySink(s, "wmdedup",
+      EventStreams.dedupWithinWatermark(stream.toDS().toDF()), "append")(
+      feedChunks(stream, rows))(_.count())
     Seq((rows.size.toLong, out)).toDF("n_in", "n_out")
   }
 
@@ -1157,23 +947,11 @@ object StreamBench {
       e.copy(event_type = if (e.event_id % 3 == 2) "del" else "add")
     }
     val stream = MemoryStream[Event]
-    val name = s"bench_cuckoo_${runId.incrementAndGet()}"
-    val q = CuckooStream.cuckooMembership(stream.toDS())
-      .toDF("event_id", "user_id", "op", "member", "applied")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-cuckoo-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val t = s.table(name)
-    val out = t.count()
-    val live = t.filter(col("op") === "add" && col("member")).count()
-    s.catalog.dropTempView(name)
+    val (out, live) = runMemorySink(s, "cuckoo",
+      CuckooStream.cuckooMembership(stream.toDS())
+        .toDF("event_id", "user_id", "op", "member", "applied"), "update")(
+      feedChunks(stream, rows))(t =>
+      (t.count(), t.filter(col("op") === "add" && col("member")).count()))
     require(out == rows.size.toLong && live > 0,
       s"qs25: expected one emission per op, got $out of ${rows.size}")
     Seq((rows.size.toLong, out, live)).toDF("n_in", "n_out", "n_live_adds")
@@ -1196,13 +974,8 @@ object StreamBench {
       .select($"user_id".as("c"),
         expr("1 + pmod(event_id, 37)").as("p"),
         expr("CAST(1 + FLOOR(value) AS BIGINT)").as("r"))
-    val q = SlopeOneStream.start(state, updates,
-      Files.createTempDirectory("bench-so-ckpt").toString)
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
+    runQuery("so")(SlopeOneStream.start(state, updates, _))(
+      feedChunks(stream, rows))
     val (nRatings, nPairs, ok) = SlopeOneStream.verifyAgainstRecompute(state)
     require(ok, "qs26: maintained devs diverged from the recompute")
     Seq((rows.size.toLong, nRatings, nPairs))
@@ -1222,22 +995,10 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_req_${runId.incrementAndGet()}"
-    val q = ReqStream.reqSketches(stream.toDS())
-      .toDF("shard", "census")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-req-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val emissions = s.table(name).select($"shard", $"census")
-      .as[(Long, Array[Byte])].collect()
-    s.catalog.dropTempView(name)
+    val emissions = runMemorySink(s, "req",
+      ReqStream.reqSketches(stream.toDS()).toDF("shard", "census"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"census").as[(Long, Array[Byte])].collect())
     val last = emissions.zipWithIndex
       .groupBy(_._1._1).map { case (_, es) => es.maxBy(_._2)._1._2 }.toSeq
     val merged = ReqStream.merge(last)
@@ -1269,22 +1030,10 @@ object StreamBench {
     implicit val sqlCtx = s.sqlContext
     val rows = boundedEvents(s, dir)
     val stream = MemoryStream[Event]
-    val name = s"bench_dgim_${runId.incrementAndGet()}"
-    val q = DgimStream.dgimCounts(stream.toDS())
-      .toDF("shard", "pos", "est")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-dgim-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val emissions = s.table(name).select($"shard", $"pos", $"est")
-      .as[(Long, Long, Long)].collect()
-    s.catalog.dropTempView(name)
+    val emissions = runMemorySink(s, "dgim",
+      DgimStream.dgimCounts(stream.toDS()).toDF("shard", "pos", "est"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"pos", $"est").as[(Long, Long, Long)].collect())
     val last = emissions.zipWithIndex
       .groupBy(_._1._1).map { case (_, es) => es.maxBy(_._2)._1 }.toSeq
     // exact replay: same shard hash, same (ts, event_id) fold order —
@@ -1342,22 +1091,10 @@ object StreamBench {
       .map { case (r, i) => (r.getLong(0), i.toLong, r.getLong(1)) }
       .toSeq
     val stream = MemoryStream[(Long, Long, Long)]
-    val name = s"bench_loader_${runId.incrementAndGet()}"
-    val q = BucketBatchStream.loaderStates(stream.toDS(), W, B)
-      .toDF("shard", "state")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("bench-loader-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / BloomBatches + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val emissions = s.table(name).select($"shard", $"state")
-      .as[(Long, Array[Byte])].collect()
-    s.catalog.dropTempView(name)
+    val emissions = runMemorySink(s, "loader",
+      BucketBatchStream.loaderStates(stream.toDS(), W, B).toDF("shard", "state"),
+      "update")(feedChunks(stream, rows))(
+      _.select($"shard", $"state").as[(Long, Array[Byte])].collect())
     val last = emissions.zipWithIndex
       .groupBy(_._1._1).map { case (_, es) => es.maxBy(_._2)._1._2 }.toSeq
     val streamed = BucketBatchStream.mergedLedger(last)
@@ -1378,6 +1115,10 @@ object StreamBench {
       .toDF("n_docs", "n_buckets", "max_state_buckets")
   }
 
+  /** Bench-only entries — timed by [[graft.Bench]], absent from
+    * [[graft.SparkEntry.queries]] so the correctness gate (which has no
+    * streaming-SQL oracle) is unaffected.
+    */
   val benchOnly: Map[String, Q] = Map(
     "qs29_bucket_batch_stream" -> qs29BucketBatchStream,
     "qs28_dgim_stream" -> qs28DgimStream,
